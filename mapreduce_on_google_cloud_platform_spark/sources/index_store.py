@@ -40,6 +40,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .tables import read_parquet
+
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
@@ -180,7 +182,7 @@ def materialized(
             # deterministic functions of the same input -- discard ours
             shutil.rmtree(tmp, ignore_errors=True)
         _BUILD_LOG.append(path)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def drop_index(sf_dir: str, name: str, version: str) -> None:

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources import load_table
+from ..sources.tables import read_parquet
 
 N_STREAM_CHUNKS = 4
 
@@ -102,7 +103,7 @@ def run_snapshot_maintenance(
         state["dir"] = out
         state["batches"] += 1
 
-    schema = spark.read.parquet(in_dir).schema
+    schema = read_parquet(spark, in_dir).schema
     q = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

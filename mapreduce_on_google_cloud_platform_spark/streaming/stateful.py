@@ -226,12 +226,11 @@ CAP_OUTPUT_SCHEMA = StructType(
 
 def documents_stream(spark: SparkSession, sf_dir: str):
     """readStream twin of the documents loader."""
-    import os
-
+    from ..sources.tables import read_parquet, table_path
     from .windows import _table_stream_dir
 
-    static = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return spark.readStream.schema(static.schema).parquet(
+    schema = read_parquet(spark, table_path(sf_dir, "documents")).schema
+    return spark.readStream.schema(schema).parquet(
         _table_stream_dir(sf_dir, "documents")
     )
 

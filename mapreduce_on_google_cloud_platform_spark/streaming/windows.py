@@ -184,14 +184,12 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream twin of the batch events loader: same schema-adaptive
     ``ts`` normalization (``sources.tables.normalize_events_ts``), so a
     testdata re-encoding changes ONE function, not every streaming query."""
-    import os
-
-    from ..sources.tables import normalize_events_ts
+    from ..sources.tables import normalize_events_ts, read_parquet, table_path
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    schema = read_parquet(spark, table_path(sf_dir, "events")).schema
     return normalize_events_ts(
-        spark.readStream.schema(static.schema).parquet(_events_stream_dir(sf_dir))
+        spark.readStream.schema(schema).parquet(_events_stream_dir(sf_dir))
     )
 
 
