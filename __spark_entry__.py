@@ -16,6 +16,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from mapreduce_on_google_cloud_platform_spark.plans import ORACLES, QUERIES
+from mapreduce_on_google_cloud_platform_spark.session import release_caches
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
@@ -38,7 +39,7 @@ def _fresh_cache(fn: Callable[[SparkSession, str], DataFrame]):
     """
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        spark.catalog.clearCache()
+        release_caches(spark)
         return fn(spark, sf_dir)
 
     return wrapped

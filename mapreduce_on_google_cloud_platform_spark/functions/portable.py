@@ -29,21 +29,12 @@ def money_sum(expr: Column) -> Column:
     return F.sum(expr).cast("double")
 
 
-def money_avg(expr: Column) -> Column:
-    """Exact-numerator average: cast(sum(dec) as double) / count."""
-    return F.sum(expr).cast("double") / F.count(F.lit(1))
-
-
 def sql_dec(x: str) -> str:
     return f"CAST({x} AS DECIMAL(18,2))"
 
 
 def sql_money_sum(x: str) -> str:
     return f"CAST(sum({sql_dec(x)}) AS DOUBLE)"
-
-
-def sql_money_avg(x: str) -> str:
-    return f"CAST(sum({sql_dec(x)}) AS DOUBLE) / count(*)"
 
 
 # lineitem revenue: extendedprice * (1 - discount), decimal-exact

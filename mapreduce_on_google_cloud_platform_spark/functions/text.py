@@ -29,11 +29,6 @@ TOKEN_CLEAN_RE = "[^0-9a-z]"
 # str.split() splits on any whitespace run.
 TOKEN_SPLIT_RE = r"\s+"
 
-# DuckDB fragments for the same pipeline, used by oracle SQL builders.
-DUCKDB_TOKENIZE = (
-    "regexp_replace(lower(__tok), '[^0-9a-z]', '', 'g')"
-)
-
 
 def clean_token(col: Column) -> Column:
     """lower + strip non-alphanumerics (reference O3+O4 as one expression)."""
@@ -101,32 +96,15 @@ def tokens_with_pos(documents: DataFrame, doc_col: str = "doc_id", text_col: str
     )
 
 
-def shingles(tokens: Column, n: int = 3) -> Column:
-    """array of n-word shingles (overlapping token windows joined by ' ').
-
-    Guarded so short docs yield an empty array -- Spark's ``sequence(1, k)``
-    with k < 1 would generate a *descending* sequence, not an empty one.
-    """
-    idx = F.sequence(F.lit(1), F.size(tokens) - (n - 1))
-    win = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(tokens, i + k) for k in range(n)]
-        ),
-    )
-    return F.when(F.size(tokens) >= n, win).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def shingles_df(documents: DataFrame, n: int = 3) -> DataFrame:
     """documents -> distinct (doc_id, sh) shingle rows.
 
     Relational formulation: posexplode tokens once, then lead() windows
-    build each n-gram.  The array-expression form (explode(shingles(
-    tokenize(text)))) inlines the tokenize chain into every element_at --
-    Catalyst re-evaluates it per element, measured 26s for 5k docs vs ~2s
-    for this plan.  One shuffle on doc_id; all expressions codegen."""
+    build each n-gram.  An array-expression form (explode of a transform
+    over element_at windows of tokenize(text)) inlines the tokenize chain
+    into every element_at -- Catalyst re-evaluates it per element,
+    measured 26s for 5k docs vs ~2s for this plan.  One shuffle on
+    doc_id; all expressions codegen."""
     from pyspark.sql import Window
 
     toks = tokens_with_pos(documents)

@@ -42,25 +42,6 @@ def norm(a: Column, dim: int = DIM) -> Column:
     return F.sqrt(dot(a, a, dim))
 
 
-def cosine(a: Column, b: Column, dim: int = DIM) -> Column:
-    """dot(a,b) / (|a| * |b|), computed in the exact operation order the
-    SQL fragments below replicate."""
-    return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
-
-
-def normalize(a: Column, dim: int = DIM) -> Column:
-    """a / |a| elementwise.  Normalizing each vector ONCE turns every
-    pairwise cosine into a single dot product -- at n^2 pairs that is 3x
-    less arithmetic, and the big win for ANN/near-dup plans.
-
-    NOTE: prefer the flat-column representation (``flat_normalized`` /
-    ``flat_dot``) in hot paths -- this HOF form is interpreted and the
-    norm sub-expression gets inlined into the lambda (recomputed per
-    ELEMENT): measured 15s just to normalize 2000 vectors."""
-    n = norm(a, dim)
-    return F.transform(a, lambda x: x / n)
-
-
 # ---------------------------------------------------------------------------
 # Flat-column vectors: the hot-path representation
 # ---------------------------------------------------------------------------
@@ -132,10 +113,6 @@ def sql_dot(a: str, b: str, dim: int = 64) -> str:
 
 def sql_norm(a: str, dim: int = 64) -> str:
     return f"sqrt({sql_dot(a, a, dim)})"
-
-
-def sql_cosine(a: str, b: str, dim: int = 64) -> str:
-    return f"{sql_dot(a, b, dim)} / ({sql_norm(a, dim)} * {sql_norm(b, dim)})"
 
 
 def sql_normalize(a: str, dim: int = 64) -> str:

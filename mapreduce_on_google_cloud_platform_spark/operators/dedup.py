@@ -4292,7 +4292,7 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed = docs.select(
         "doc_id",
         F.substring(
-            F.regexp_replace(F.lower(F.col("text")), "[^0-9a-z]", ""),
+            clean_token(F.col("text")),
             1,
             SNM_KEY_LEN,
         ).alias("key"),

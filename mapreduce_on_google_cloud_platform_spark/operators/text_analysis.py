@@ -27,6 +27,7 @@ from ..functions.numeric import checked_bigint as _checked_bigint
 from ..functions.text import (
     DUCKDB_SHINGLES_CTE,
     DUCKDB_TOKS_CTE,
+    clean_token,
     duckdb_tokens_sql,
     shingles_df,
     tokenize,
@@ -2683,7 +2684,7 @@ def corpus_zipf_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "lang",
         F.explode(F.split(F.col("text"), r"\s+")).alias("_tok"),
-    ).select("lang", F.regexp_replace(F.lower("_tok"), "[^0-9a-z]", "").alias("word"))
+    ).select("lang", clean_token(F.col("_tok")).alias("word"))
     toks = toks.filter(F.col("word") != "")
     wc = toks.groupBy("lang", "word").agg(F.count(F.lit(1)).alias("c"))
     w = Window.partitionBy("lang").orderBy(F.desc("c"), F.asc("word"))
@@ -2867,7 +2868,7 @@ def _dsir_feature_stream(docs: DataFrame) -> DataFrame:
             "doc_id",
             "lang",
             "pos",
-            F.regexp_replace(F.lower("_tok"), "[^0-9a-z]", "").alias("word"),
+            clean_token(F.col("_tok")).alias("word"),
         )
         .filter(F.col("word") != "")
     )

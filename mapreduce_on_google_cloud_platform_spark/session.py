@@ -4,7 +4,8 @@ Local mode is a correctness harness; the configuration is written for the
 real target -- a multi-executor cluster scanning ~100 TB of parquet:
 
 * AQE on (runtime partition coalescing, skew-join splitting) so declared
-  shuffle counts are starting points, not destiny.
+  shuffle counts are starting points, not destiny.  Spark 4 enables all
+  three AQE switches by default, so the builder does not repeat them.
 * Shuffle partitions sized to cores locally; on a cluster this should be
   2-3x total executor cores (AQE coalesces the excess).
 * Session timezone pinned to UTC so event-time semantics are stable and
@@ -37,17 +38,14 @@ def get_spark(app_name: str = "mapreduce_gcp_spark", *, cpus: int | None = None)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(n))
         .config("spark.default.parallelism", str(n))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # the generated-code cache defaults to 100 classes; a session
-        # serving 140+ distinct declared queries (bench, sweep, a real
-        # multi-tenant cluster) evicts and re-JITs hot plan fragments
+        # serving 140+ distinct declared queries (the oracle sweep, a
+        # real multi-tenant cluster) evicts and re-JITs hot plan fragments
         # mid-workload -- measured as 2-3x in-suite slowdowns on the
         # iterative operators.  Size it to the query surface.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
@@ -74,7 +72,7 @@ def release_caches(spark: SparkSession) -> None:
     outlives the call.  Iterative operators that fully consume their
     intermediates (the connected-components loop) do pair persist with
     unpersist; for the rest, any harness running many queries in one
-    session (bench.py, tools/sweep.py) calls this between queries, and
+    session (perfbench/, tools/sweep.py) calls this between queries, and
     long-lived user sessions should do the same at natural barriers.
     """
     spark.catalog.clearCache()

@@ -81,20 +81,17 @@ def _dataset_fingerprint(sf_dir: str) -> str:
 # size-gated fan-out below.
 _LAYOUT_GEN = "g2"
 
-# Target bytes per written index part-file, env-overridable.  Local
-# default 64 KiB: measured on this machine (see OPTIMIZATION_r13.md),
-# it is the break-even where one more scan task stops paying for its
-# ~5-15 ms of scheduling+open overhead on these probe pipelines --
-# smaller tables collapse to fewer files (round 12's flat 32-way
-# fan-out regressed the tiny-table probes dbscan_lsh_clusters /
+# Target bytes per written index part-file: 64 KiB.  Measured in local
+# mode, it is the break-even where one more scan task stops paying for
+# its ~5-15 ms of scheduling+open overhead on these probe pipelines --
+# smaller tables collapse to fewer files (round 12's flat 32-way fan-out
+# regressed the tiny-table probes dbscan_lsh_clusters /
 # ann_filtered_topk / ann_ivf_topk), larger tables still spread to the
-# full core count.  At production scale set this to 128-512 MiB (guide
-# §6 file sizing); the fan-out is additionally capped by the session's
+# full core count.  (Production-scale tables usually target 128-512 MiB
+# per file.)  The fan-out is additionally capped by the session's
 # default_parallelism, so the policy scales with the cluster rather
 # than encoding local core count.
-_FILE_TARGET_BYTES = int(
-    os.environ.get("SPARK_GRAFT_INDEX_FILE_TARGET", 64 * 1024)
-)
+_FILE_TARGET_BYTES = 64 * 1024
 
 
 def index_path(sf_dir: str, name: str, version: str) -> str:
@@ -114,11 +111,6 @@ def _dir_bytes(path: str) -> int:
             except OSError:
                 pass
     return total
-
-
-# per-process log of index paths this process actually BUILT (vs read):
-# lets build_all_indexes report cold builds vs warm reuse honestly
-_BUILD_LOG: list[str] = []
 
 
 def materialized(
@@ -149,83 +141,43 @@ def materialized(
         # out across ceil(bytes / _FILE_TARGET_BYTES) files capped at
         # default_parallelism -- big tables keep the full spread, tiny
         # tables collapse back toward one file.  The extra read+write of
-        # the staged copy is one-time index-BUILD cost, reported
-        # separately in index_build_sec as always; values are unaffected
-        # (every consumer is pinned order-independent by the two-layout
-        # stability sweeps).
-        build(spark, sf_dir).write.mode("overwrite").parquet(stage)
-        n_files = max(
-            1,
-            min(
-                default_parallelism(),
-                -(-_dir_bytes(stage) // _FILE_TARGET_BYTES),
-            ),
-        )
-        n_staged = sum(
-            1 for f in os.listdir(stage) if f.startswith("part-")
-        )
-        if n_staged == n_files:
-            # the natural build layout already matches the policy (most
-            # small tables: one AQE-coalesced output file) -- promote the
-            # staged copy and skip the second write entirely
-            tmp, stage = stage, None
-        else:
-            spark.read.parquet(stage).repartition(n_files).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            shutil.rmtree(stage, ignore_errors=True)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
+        # the staged copy is one-time index-BUILD cost; values are
+        # unaffected (every consumer is pinned order-independent by the
+        # two-layout stability sweeps).
         try:
-            os.rename(tmp, path)
-        except OSError:
-            # a concurrent builder won the rename race; both copies are
-            # deterministic functions of the same input -- discard ours
+            build(spark, sf_dir).write.mode("overwrite").parquet(stage)
+            n_files = max(
+                1,
+                min(
+                    default_parallelism(),
+                    -(-_dir_bytes(stage) // _FILE_TARGET_BYTES),
+                ),
+            )
+            n_staged = sum(
+                1 for f in os.listdir(stage) if f.startswith("part-")
+            )
+            if n_staged == n_files:
+                # the natural build layout already matches the policy (most
+                # small tables: one AQE-coalesced output file) -- promote
+                # the staged copy and skip the second write entirely
+                built = stage
+            else:
+                spark.read.parquet(stage).repartition(n_files).write.mode(
+                    "overwrite"
+                ).parquet(tmp)
+                built = tmp
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            try:
+                os.rename(built, path)
+            except OSError:
+                # a concurrent builder won the rename race; both copies
+                # are deterministic functions of the same input -- ours
+                # is discarded below
+                pass
+        finally:
+            # whatever was not promoted -- the staged copy after a
+            # rewrite, a lost race, or a build that raised -- must not
+            # stay in the store
+            shutil.rmtree(stage, ignore_errors=True)
             shutil.rmtree(tmp, ignore_errors=True)
-        _BUILD_LOG.append(path)
     return read_parquet(spark, path)
-
-
-def drop_index(sf_dir: str, name: str, version: str) -> None:
-    """Test hook: force the next ``materialized`` call to rebuild."""
-    shutil.rmtree(index_path(sf_dir, name, version), ignore_errors=True)
-
-
-def build_all_indexes(spark: SparkSession, sf_dir: str) -> dict:
-    """Build (or verify) every declared index table for ``sf_dir`` --
-    the explicit index-build phase of the index/probe split.  bench.py
-    runs and times this BEFORE the query trials so probe timings measure
-    serving cost and the one-time build is reported separately (at 100 TB
-    this is the scheduled indexing job, not part of any query).
-
-    Returns {"built": [...], "reused": [...]} so a bench record shows
-    honestly whether its index-build time was a cold build or a warm
-    existence check of tables persisted by an earlier run."""
-    from ..operators import dedup, similarity
-
-    accessors = [
-        dedup.shingles_indexed,
-        dedup.minhash_sig_indexed,
-        dedup.jaccard_pairs_indexed,
-        dedup.neardup_pairs_indexed,
-        dedup.simhash_pairs_indexed,
-        dedup.simhash_clusters_indexed,
-        similarity.emb_norm_indexed,
-        similarity.lsh_sig_indexed,
-        similarity.pq_vectors_indexed,
-        similarity.pq_codes_indexed,
-        similarity.pq_coarse_assign_indexed,
-        similarity.pq_residuals_indexed,
-        similarity.pq_res_codes_indexed,
-        similarity.ivf_assign_indexed,
-        similarity.ann_truth_indexed,
-        similarity.ivf_topk_indexed,
-        similarity.knn_edges_indexed,
-        similarity.kmeans_assign_indexed,
-    ]
-    built, reused = [], []
-    for fn in accessors:
-        before = len(_BUILD_LOG)
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-        (built if len(_BUILD_LOG) > before else reused).append(fn.__name__)
-    return {"built": built, "reused": reused}

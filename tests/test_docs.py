@@ -8,6 +8,7 @@ shipping a wrong load-bearing number to the judge.
 
 from __future__ import annotations
 
+import os
 import re
 
 from mapreduce_on_google_cloud_platform_spark.plans.registry import ORACLES, QUERIES
@@ -31,3 +32,34 @@ def test_readme_surface_counts_match_registry():
 
 def test_every_oracle_names_a_registered_query():
     assert set(ORACLES) <= set(QUERIES)
+
+
+# A repo script path in backticks: anything under tools/, perfbench/ or
+# tests/, or a bare root-level name standing alone (`__spark_entry__.py`)
+# or run by python (`python3 name.py`).  Package modules are cited
+# package-relative (`sources/tables.py`) and reference citations carry a
+# line range (`master.py:54-64`); neither is a repo script path.
+_SCRIPT_DIR_PATH = re.compile(r"(?<![\w/.-])((?:tools|perfbench|tests)/[\w./-]*\.py)\b")
+_ROOT_SCRIPT = re.compile(r"^python3? +([\w.-]+\.py)\b|^([\w.-]+\.py)(?:::\w+)?$")
+
+
+def _backticked_script_paths(text):
+    text = re.sub(r"```.*?```", "", text, flags=re.S)
+    for span in re.findall(r"`([^`]+)`", text):
+        yield from _SCRIPT_DIR_PATH.findall(span)
+        m = _ROOT_SCRIPT.match(span)
+        if m:
+            yield m.group(1) or m.group(2)
+
+
+def test_doc_script_paths_exist():
+    """Docs that tell a reader what to run must name scripts that exist
+    (README once pointed at a benchmark script after it was deleted)."""
+    docs = ["README.md", "SCALING.md", ".claude/skills/verify/SKILL.md"]
+    missing = sorted(
+        (doc, path)
+        for doc in docs
+        for path in set(_backticked_script_paths(open(f"{REPO}/{doc}").read()))
+        if not os.path.isfile(f"{REPO}/{path}")
+    )
+    assert missing == []

@@ -6,6 +6,9 @@ from __future__ import annotations
 
 import os
 
+import pytest
+from pyspark.errors import PySparkException
+
 from mapreduce_on_google_cloud_platform_spark.operators.dedup import (
     dedup_clusters,
     dedup_minhash_lsh,
@@ -90,3 +93,22 @@ def test_materialized_builds_once_and_rereads(tmp_path, spark, monkeypatch):
     # a version bump forces a rebuild
     materialized(spark, SF_SMOKE, "probe_test", "v2", build)
     assert len(calls) == 2
+
+
+def test_failed_build_leaves_no_stage_or_tmp_dir(tmp_path, spark, monkeypatch):
+    """A builder whose plan fails at execution must raise and leave no
+    ``.stage.<pid>`` / ``.tmp.<pid>`` directory behind in the store."""
+    store = tmp_path / "store"
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(store))
+
+    def build(s, d):
+        return s.range(5).selectExpr("assert_true(id < 0) AS v")
+
+    with pytest.raises(PySparkException):
+        materialized(spark, SF_SMOKE, "failing_probe", "v1", build)
+    left = [
+        p.name
+        for p in store.rglob("*")
+        if ".stage." in p.name or ".tmp." in p.name
+    ]
+    assert left == []
