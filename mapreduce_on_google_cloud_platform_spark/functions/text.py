@@ -55,12 +55,35 @@ def tokenize(text: Column) -> Column:
     )
 
 
+def docs_by_id(documents: DataFrame, doc_col: str = "doc_id") -> DataFrame:
+    """Hash-partition documents on ``doc_col`` BEFORE tokenizing.
+
+    For consumers whose next key contains the document (``groupBy(word,
+    doc)``, ``Window.partitionBy(doc)``): the token rows inherit
+    ``hashpartitioning(doc_col, n)``, which already satisfies those
+    operators, so the only shuffle before them is the raw text, and the
+    explode, partial aggregate and window run as n tasks instead of one
+    per parquet row group.  ``n`` is the session's
+    ``spark.sql.shuffle.partitions`` and must be passed explicitly: a
+    column-only ``repartition(doc_col)`` plans as REPARTITION_BY_COL,
+    which AQE coalesces back to one partition on a small corpus, while
+    REPARTITION_BY_NUM keeps its count."""
+    n = int(documents.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return documents.repartition(n, doc_col)
+
+
 def tokens_df(documents: DataFrame, doc_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """documents(doc, text) -> one row per token with lineage (O1-O5).
 
     The reference materializes this list on the master and chunks it by
     hand (``master.py:54-84``, dropping ``len % map_num`` trailing tokens);
     here it is a distributed project+explode that never touches the driver.
+
+    Partitioning is the caller's: the tokens keep whatever partitioning
+    ``documents`` has.  The doc-keyed indexes (``inverted_index*``) pass
+    ``docs_by_id(documents)`` so their (word, doc) aggregate needs no
+    shuffle of its own; the word-keyed counts pass the raw scan, because
+    a doc shuffle there only adds bytes ahead of the word shuffle.
 
     Formulation: explode the raw whitespace split FIRST, then clean/filter
     the exploded column with scalar expressions.  Identical semantics to

@@ -9,6 +9,16 @@ each collapses to a handful of declarative ops, and crucially gains
 token crosses the network; here `groupBy.count` emits one partial row per
 (partition, word) before the shuffle, which is the difference between
 shuffling O(tokens) and O(distinct words) at 100 TB.
+
+The doc-keyed queries (every ``inverted_index*``: the next key after the
+tokenizer contains ``doc_id``) tokenize ``docs_by_id(docs)``: the raw
+text is hash-partitioned on doc_id once, which already satisfies
+groupBy(word, doc_id) and the positional index's doc window, so no token
+or (word, doc) partial row is shuffled before the first aggregate and
+the tokenizer runs as spark.sql.shuffle.partitions tasks rather than
+one per parquet row group.  ``word_count`` and ``word_count_salted`` key
+on word alone; a doc shuffle there would only add bytes ahead of the
+word shuffle, so they tokenize the scan as it is.
 """
 
 from __future__ import annotations
@@ -18,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import (
     DUCKDB_TOKS_CTE,
+    docs_by_id,
     duckdb_tokens_sql,
     tokens_df,
     tokens_with_pos,
@@ -79,7 +90,7 @@ def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     return (
-        tokens_df(docs)
+        tokens_df(docs_by_id(docs))
         .groupBy("word", "doc_id")
         .agg(F.count("*").alias("cnt"))
     )
@@ -107,7 +118,7 @@ def inverted_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     per_doc = (
-        tokens_df(docs)
+        tokens_df(docs_by_id(docs))
         .groupBy("word", "doc_id")
         .agg(F.count("*").alias("cnt"))
     )
@@ -155,7 +166,7 @@ def inverted_index_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     from pyspark.sql import Window
 
-    toks = tokens_with_pos(docs)
+    toks = tokens_with_pos(docs_by_id(docs))
     w = Window.partitionBy("doc_id").orderBy("pos")
     dense = toks.select(
         "doc_id", "word", F.row_number().over(w).alias("p")
@@ -198,7 +209,7 @@ def inverted_index_maptype(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     return (
-        tokens_df(docs)
+        tokens_df(docs_by_id(docs))
         .groupBy("word", "doc_id")
         .agg(F.count("*").alias("cnt"))
         .groupBy("word")
@@ -261,7 +272,7 @@ def inverted_index_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     postings = (
-        tokens_df(docs)
+        tokens_df(docs_by_id(docs))
         .groupBy("word", "doc_id")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )

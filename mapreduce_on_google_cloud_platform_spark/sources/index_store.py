@@ -102,15 +102,30 @@ def index_path(sf_dir: str, name: str, version: str) -> str:
     )
 
 
-def _dir_bytes(path: str) -> int:
+def _part_bytes(path: str) -> int:
+    """Bytes of the data files (``part-*``) under ``path``: ``_SUCCESS``,
+    ``.crc`` checksums and other metadata are not read by a scan."""
     total = 0
     for root, _dirs, files in os.walk(path):
         for fn in files:
+            if not fn.startswith("part-"):
+                continue
             try:
                 total += os.stat(os.path.join(root, fn)).st_size
             except OSError:
                 pass
     return total
+
+
+def _fan_out(stage: str) -> int:
+    """Part-file count for a staged index table: ceil(data bytes /
+    _FILE_TARGET_BYTES), at least 1, at most default_parallelism."""
+    from ..session import default_parallelism
+
+    return max(
+        1,
+        min(default_parallelism(), -(-_part_bytes(stage) // _FILE_TARGET_BYTES)),
+    )
 
 
 def materialized(
@@ -122,8 +137,6 @@ def materialized(
 ) -> DataFrame:
     """Return the materialized intermediate ``name`` for ``sf_dir``,
     building it via ``build(spark, sf_dir) -> DataFrame`` on first use."""
-    from ..session import default_parallelism
-
     path = index_path(sf_dir, name, version)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         tmp = f"{path}.tmp.{os.getpid()}"
@@ -146,13 +159,7 @@ def materialized(
         # two-layout stability sweeps).
         try:
             build(spark, sf_dir).write.mode("overwrite").parquet(stage)
-            n_files = max(
-                1,
-                min(
-                    default_parallelism(),
-                    -(-_dir_bytes(stage) // _FILE_TARGET_BYTES),
-                ),
-            )
+            n_files = _fan_out(stage)
             n_staged = sum(
                 1 for f in os.listdir(stage) if f.startswith("part-")
             )

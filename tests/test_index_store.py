@@ -16,6 +16,8 @@ from mapreduce_on_google_cloud_platform_spark.operators.dedup import (
     simhash_clusters_indexed,
 )
 from mapreduce_on_google_cloud_platform_spark.sources.index_store import (
+    _FILE_TARGET_BYTES,
+    _fan_out,
     index_path,
     materialized,
 )
@@ -112,3 +114,23 @@ def test_failed_build_leaves_no_stage_or_tmp_dir(tmp_path, spark, monkeypatch):
         if ".stage." in p.name or ".tmp." in p.name
     ]
     assert left == []
+
+
+def test_fan_out_counts_only_part_file_bytes(tmp_path, monkeypatch):
+    """Metadata next to the data (``_SUCCESS``, ``.crc`` checksums, any
+    other non-``part-`` file) is never scanned, so it must not raise the
+    staged table's part-file count; ``part-`` bytes still do."""
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
+    stage = tmp_path / "probe.stage.1"
+    stage.mkdir()
+    (stage / "part-00000-a.snappy.parquet").write_bytes(b"x" * 1024)
+    (stage / "_SUCCESS").write_bytes(b"")
+    (stage / ".part-00000-a.snappy.parquet.crc").write_bytes(
+        b"c" * (4 * _FILE_TARGET_BYTES)
+    )
+    (stage / "_metadata").write_bytes(b"m" * (4 * _FILE_TARGET_BYTES))
+    assert _fan_out(str(stage)) == 1
+    (stage / "part-00001-a.snappy.parquet").write_bytes(
+        b"x" * (2 * _FILE_TARGET_BYTES)
+    )
+    assert _fan_out(str(stage)) == 3

@@ -129,6 +129,40 @@ def test_salted_wordcount_two_stage(spark):
     assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 2
 
 
+@pytest.mark.parametrize(
+    "name,n_exchanges",
+    [
+        ("inverted_index", 1),
+        ("inverted_index_postings", 2),
+        ("inverted_index_positional", 1),
+    ],
+)
+def test_doc_keyed_indexes_shuffle_documents_once(spark, name, n_exchanges):
+    """The doc-keyed indexes hash-partition the raw documents on doc_id
+    with an explicit count before tokenizing: that one exchange satisfies
+    groupBy(word, doc_id) and Window.partitionBy(doc_id), so the token
+    rows never shuffle, and AQE does not coalesce it back to one task."""
+    n = spark.conf.get("spark.sql.shuffle.partitions")
+    plan = plan_of(spark, name)
+    assert re.search(
+        rf"^Arguments: hashpartitioning\(doc_id#\d+L, {n}\), REPARTITION_BY_NUM",
+        plan,
+        re.M,
+    )
+    assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == n_exchanges
+
+    df = QUERIES[name](spark, SF_SMOKE)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    doc_exchange = rf"Exchange hashpartitioning\(doc_id#\d+L, {n}\), REPARTITION_BY_NUM"
+    assert re.search(doc_exchange, final)
+    assert not re.search(
+        rf"AQEShuffleRead[^\n]*\n[^\n]*ShuffleQueryStage[^\n]*\n[^\n]*{doc_exchange}",
+        final,
+    )
+
+
 def test_q6_no_join_single_exchange_full_pushdown(spark):
     """Q6 is the pure pushdown benchmark: every predicate must reach the
     parquet scan and the whole query is one partial+final agg pair."""

@@ -53,6 +53,36 @@ def test_parallelism_invariance(spark):
         assert got == base
 
 
+DOC_KEYED = (
+    "inverted_index",
+    "inverted_index_postings",
+    "inverted_index_positional",
+    "inverted_index_map",
+    "inverted_index_size_estimate",
+)
+
+
+def test_doc_partition_count_invariance(spark):
+    """The doc-keyed indexes repartition documents to
+    spark.sql.shuffle.partitions before tokenizing; their rows must not
+    depend on that count (one partition, the core count, the
+    reference's 45 map workers)."""
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    try:
+        got = {}
+        for n in (1, 4, 45):
+            spark.conf.set(key, str(n))
+            got[n] = {
+                name: sorted(QUERIES[name](spark, SF_SMOKE).collect())
+                for name in DOC_KEYED
+            }
+    finally:
+        spark.conf.set(key, saved)
+    assert all(got[1][name] for name in DOC_KEYED)
+    assert got[1] == got[4] == got[45]
+
+
 def test_tokenizer_rules(spark):
     """Pin the tokenizer contract (FIXTURES.md §1): punctuation deleted not
     split, digits kept, symbol-only tokens dropped, whitespace runs split."""
@@ -118,5 +148,5 @@ def test_reference_text_sink(spark):
 
 @pytest.mark.slow
 def test_oracle_parity_sf001(spark):
-    for name in ("wordcount", "inverted_index_postings"):
+    for name in ("wordcount", "inverted_index_postings", "inverted_index_positional"):
         assert_matches_oracle(QUERIES[name](spark, SF_ORACLE), ORACLES[name], SF_ORACLE)
