@@ -26,6 +26,9 @@ lacks ``conv``): a hex digit's value is its position in
 
 from __future__ import annotations
 
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+
 NUM_MINHASHES = 16
 MINHASH_BANDS = 8  # 8 bands x 2 rows
 
@@ -69,3 +72,11 @@ MINHASH_AB: list[tuple[int, int]] = [
     for i in range(NUM_MINHASHES)
 ]
 assert all(a != 0 for a, _ in MINHASH_AB)
+
+
+def md5_prefix(col: Column | str, nibbles: int = 15) -> Column:
+    """The first ``nibbles`` hex digits of ``md5(col)`` as a BIGINT: the
+    Spark spelling of the portable hash above (15 nibbles = 60 bits fits
+    a signed BIGINT; DuckDB reads the same value with
+    ``('0x' || substr(md5(x),1,nibbles))::BIGINT``)."""
+    return F.conv(F.substring(F.md5(col), 1, nibbles), 16, 10).cast("bigint")

@@ -1,4 +1,17 @@
-"""Shared tokenizer column expressions.
+"""The one text front end: every Spark token stream, text normaliser and
+document re-spread in the package comes from this module.
+
+Entry points (no operator re-implements them):
+
+* ``clean_token``: lower + strip non-``[0-9a-z]`` of one raw token.
+* ``tokenize``: text -> array of cleaned tokens, for callers that need
+  the array itself (sizes, joins back into a string).
+* ``tokens_df`` / ``tokens_with_pos``: documents -> one row per cleaned
+  token, carrying the ``keep`` columns (and the split position).
+* ``docs_by_id``: documents hash-partitioned on ``doc_id`` before a
+  doc-keyed tokenize.
+* ``normalize_text``: the whitespace-normalised lowercase content key of
+  exact dedup.
 
 Reference semantics (``/root/reference/master.py:58-62``):
   1. split on any whitespace (``str.split()``)
@@ -36,7 +49,8 @@ def clean_token(col: Column) -> Column:
 
 
 def tokenize(text: Column) -> Column:
-    """text -> array<string> of cleaned, non-empty tokens (O2-O4).
+    """text -> array<string> of cleaned, non-empty tokens (O2-O4), for
+    callers that need the array itself.
 
     Kept as the transform/filter lambda form DELIBERATELY (optimization
     round 12): an equivalent scalar chain (lower -> delete non-[0-9a-z\\s]
@@ -46,34 +60,60 @@ def tokenize(text: Column) -> Column:
     over the 25 tokenize-consuming headline queries at sf0.1: three
     whole-document regexp passes per reference cost more than the
     per-token lambda interpretation they replace.  Rewrites that DID
-    win (winnowing_fingerprints, shingles_df) drop the array form
-    entirely for posexplode + scalar clean_token + lead windows; do
-    that shape, not a tokenize() swap, when a consumer shows up hot."""
+    win (winnowing_fingerprints, shingles_df) drop the array form for
+    the ``tokens_with_pos`` row stream + lead windows; do that, not a
+    tokenize() swap, when a consumer shows up hot."""
     return F.filter(
         F.transform(F.split(text, TOKEN_SPLIT_RE), clean_token),
         lambda w: w != F.lit(""),
     )
 
 
-def docs_by_id(documents: DataFrame, doc_col: str = "doc_id") -> DataFrame:
-    """Hash-partition documents on ``doc_col`` BEFORE tokenizing.
+def normalize_text(text: Column) -> Column:
+    """lower + trim + collapse whitespace runs to one space: the content
+    key exact dedup hashes (``dedup_exact``, ``doc_fingerprint``, the
+    curation pipeline).  The oracles spell the same chain in DuckDB."""
+    return F.regexp_replace(F.trim(F.lower(text)), r"\s+", " ")
+
+
+def docs_by_id(documents: DataFrame) -> DataFrame:
+    """Hash-partition documents on ``doc_id`` BEFORE tokenizing.
 
     For consumers whose next key contains the document (``groupBy(word,
-    doc)``, ``Window.partitionBy(doc)``): the token rows inherit
-    ``hashpartitioning(doc_col, n)``, which already satisfies those
+    doc_id)``, ``Window.partitionBy(doc_id)``): the token rows inherit
+    ``hashpartitioning(doc_id, n)``, which already satisfies those
     operators, so the only shuffle before them is the raw text, and the
     explode, partial aggregate and window run as n tasks instead of one
     per parquet row group.  ``n`` is the session's
     ``spark.sql.shuffle.partitions`` and must be passed explicitly: a
-    column-only ``repartition(doc_col)`` plans as REPARTITION_BY_COL,
+    column-only ``repartition("doc_id")`` plans as REPARTITION_BY_COL,
     which AQE coalesces back to one partition on a small corpus, while
     REPARTITION_BY_NUM keeps its count."""
     n = int(documents.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return documents.repartition(n, doc_col)
+    return documents.repartition(n, "doc_id")
 
 
-def tokens_df(documents: DataFrame, doc_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """documents(doc, text) -> one row per token with lineage (O1-O5).
+def _token_rows(documents: DataFrame, keep: tuple[str, ...], with_pos: bool) -> DataFrame:
+    """The one tokenizer body behind ``tokens_df`` and ``tokens_with_pos``:
+    explode (or posexplode) the raw split, clean, drop empties."""
+    split = F.split(F.col("text"), TOKEN_SPLIT_RE)
+    if with_pos:
+        exploded, pos = F.posexplode(split).alias("pos", "_tok"), ["pos"]
+    else:
+        exploded, pos = F.explode(split).alias("_tok"), []
+    return (
+        documents.select(*keep, exploded)
+        .select(*keep, *pos, clean_token(F.col("_tok")).alias("word"))
+        .filter(F.col("word") != "")
+    )
+
+
+def tokens_df(documents: DataFrame, keep: tuple[str, ...] = ("doc_id",)) -> DataFrame:
+    """documents(text, *keep) -> one ``(*keep, word)`` row per token (O1-O5).
+
+    ``keep`` names the document columns carried next to each token, so a
+    caller that groups by a document attribute (``source``, ``lang``)
+    needs no join back to the documents.
 
     The reference materializes this list on the master and chunks it by
     hand (``master.py:54-84``, dropping ``len % map_num`` trailing tokens);
@@ -90,33 +130,16 @@ def tokens_df(documents: DataFrame, doc_col: str = "doc_id", text_col: str = "te
     ``explode(tokenize(...))`` but the scalar form stays inside
     whole-stage codegen, while transform/filter lambdas run interpreted
     (SCALING.md pitfall 1) and cost ~4x on the first compile."""
-    return (
-        documents.select(
-            F.col(doc_col),
-            F.explode(F.split(F.col(text_col), TOKEN_SPLIT_RE)).alias("_tok"),
-        )
-        .select(F.col(doc_col), clean_token(F.col("_tok")).alias("word"))
-        .filter(F.col("word") != "")
-    )
+    return _token_rows(documents, keep, with_pos=False)
 
 
-def tokens_with_pos(documents: DataFrame, doc_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Like ``tokens_df`` but keeps each token's ORDER key: ``pos`` is the
-    index in the raw whitespace split, so it is sparse where tokens
-    cleaned to empty were dropped — callers must treat it as an ordering,
-    not a dense 0..n-1 index (windows ordered by pos see exactly the
-    cleaned token sequence).  Same scalar-after-posexplode formulation as
-    tokens_df, for the same codegen reason."""
-    return (
-        documents.select(
-            F.col(doc_col),
-            F.posexplode(F.split(F.col(text_col), TOKEN_SPLIT_RE)).alias(
-                "pos", "_tok"
-            ),
-        )
-        .select(F.col(doc_col), "pos", clean_token(F.col("_tok")).alias("word"))
-        .filter(F.col("word") != "")
-    )
+def tokens_with_pos(documents: DataFrame, keep: tuple[str, ...] = ("doc_id",)) -> DataFrame:
+    """Like ``tokens_df`` but keeps each token's ORDER key: ``(*keep, pos,
+    word)`` where ``pos`` is the index in the raw whitespace split, so it
+    is sparse where tokens cleaned to empty were dropped — callers must
+    treat it as an ordering, not a dense 0..n-1 index (windows ordered by
+    pos see exactly the cleaned token sequence)."""
+    return _token_rows(documents, keep, with_pos=True)
 
 
 def shingles_df(documents: DataFrame, n: int = 3) -> DataFrame:
@@ -167,14 +190,14 @@ DUCKDB_SHINGLES_CTE = (
 )
 
 
-def duckdb_tokens_sql(doc_col: str = "doc_id", text_col: str = "text", table: str = "documents") -> str:
-    """DuckDB SQL producing the identical (doc, word) token stream."""
-    return f"""
-        SELECT {doc_col},
+def duckdb_tokens_sql() -> str:
+    """DuckDB SQL producing the identical (doc_id, word) token stream."""
+    return """
+        SELECT doc_id,
                regexp_replace(lower(tok), '[^0-9a-z]', '', 'g') AS word
         FROM (
-            SELECT {doc_col}, unnest(regexp_split_to_array({text_col}, '\\s+')) AS tok
-            FROM {table}
+            SELECT doc_id, unnest(regexp_split_to_array(text, '\\s+')) AS tok
+            FROM documents
         )
         WHERE regexp_replace(lower(tok), '[^0-9a-z]', '', 'g') <> ''
     """

@@ -39,15 +39,17 @@ from ..functions.hashing import (
     SIMHASH_BITS,
     SIMHASH_WIDE_BANDS,
     SIMHASH_WIDE_BITS,
+    md5_prefix,
 )
 from ..functions.text import (
     DUCKDB_SHINGLES_CTE,
     DUCKDB_TOKS_CTE,
-    TOKEN_SPLIT_RE,
     clean_token,
+    normalize_text,
     shingles_df,
     tokenize,
     tokens_df,
+    tokens_with_pos,
 )
 from ..functions.vectors import (
     SQL_NORMALIZED_CTE,
@@ -66,10 +68,6 @@ COSINE_NEAR_DUP = 0.4    # non-trivial on the synthetic embeddings
 # ---------------------------------------------------------------------------
 
 
-def _norm_text(col: Column) -> Column:
-    return F.regexp_replace(F.trim(F.lower(col)), r"\s+", " ")
-
-
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact content dedup: md5 over whitespace-normalized lowercase text,
     keep the smallest doc_id per group.  One shuffle on the hash; the
@@ -77,7 +75,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select(
-            F.md5(_norm_text(F.col("text"))).alias("content_hash"), "doc_id"
+            F.md5(normalize_text(F.col("text"))).alias("content_hash"), "doc_id"
         )
         .groupBy("content_hash")
         .agg(
@@ -509,10 +507,7 @@ def _sig_from_shingles(sh: DataFrame) -> DataFrame:
     no seed explode, no pivot, and the shuffle carries 16 ints per row
     instead of 16 (seed, hex-string) rows."""
     uniq = sh.select("sh").distinct()
-    h = (
-        F.conv(F.substring(F.md5(F.col("sh")), 1, 15), 16, 10).cast("bigint")
-        % MINHASH_P
-    )
+    h = md5_prefix(F.col("sh")) % MINHASH_P
     dict_df = uniq.select(
         "sh",
         *[
@@ -2300,45 +2295,28 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     # original explode(transform(sequence(...), i -> concat_ws(...)))
     # ran the per-element lambda interpreted outside whole-stage codegen
     # (the SCALING.md pitfall-1 shape) and cost 60 s of the bench at
-    # sf0.1.  Equivalent form: explode the cleaned token stream with its
+    # sf0.1.  Equivalent form: the tokens_with_pos stream with a
     # dense order index (row_number over the raw split position), then
     # assemble each 3-gram from lead() neighbors -- every expression
     # stays inside codegen and the doc-partitioned window shuffle is the
     # same partitioning every later winnowing window reuses.  Verified
     # bit-identical to the lambda form ((doc_id, pos, h) multisets equal
     # at sf0.01 and sf0.1).
-    toks = (
-        docs.select(
-            "doc_id",
-            F.posexplode(F.split(F.col("text"), TOKEN_SPLIT_RE)).alias(
-                "sp", "_tok"
-            ),
-        )
-        .select("doc_id", "sp", clean_token(F.col("_tok")).alias("w"))
-        .filter(F.col("w") != "")
-    )
-    w_ord = Window.partitionBy("doc_id").orderBy("sp")
+    w_ord = Window.partitionBy("doc_id").orderBy("pos")
     kg = (
-        toks.select(
+        tokens_with_pos(docs)
+        .select(
             "doc_id",
             F.row_number().over(w_ord).cast("bigint").alias("pos"),
-            "w",
-            F.lead("w", 1).over(w_ord).alias("w1"),
-            F.lead("w", WINNOW_K - 1).over(w_ord).alias("w2"),
+            "word",
+            F.lead("word", 1).over(w_ord).alias("w1"),
+            F.lead("word", WINNOW_K - 1).over(w_ord).alias("w2"),
         )
         .filter(F.col("w2").isNotNull())
         .select(
             "doc_id",
             "pos",
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws(" ", "w", "w1", "w2")), 1, 15
-                ),
-                16,
-                10,
-            )
-            .cast("bigint")
-            .alias("h"),
+            md5_prefix(F.concat_ws(" ", "word", "w1", "w2")).alias("h"),
         )
         .persist()
     )
@@ -4409,31 +4387,11 @@ CDC_MOD = 16  # expected chunk length in tokens (boundary rate 1/16)
 
 
 def cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from ..functions.text import TOKEN_SPLIT_RE, clean_token
-
     docs = load_table(spark, sf_dir, "documents")
-    tok = (
-        docs.select(
-            "doc_id",
-            "source",
-            F.posexplode(F.split(F.col("text"), TOKEN_SPLIT_RE)).alias(
-                "pos", "_t"
-            ),
-        )
-        .select(
-            "doc_id", "source", "pos", clean_token(F.col("_t")).alias("word")
-        )
-        .filter(F.col("word") != "")
-    )
+    tok = tokens_with_pos(docs, keep=("doc_id", "source"))
     # boundary AFTER a token whose 60-bit md5 prefix is 0 mod CDC_MOD;
     # chunk_id of a token = boundaries among strictly earlier tokens
-    b = (
-        F.conv(F.substring(F.md5("word"), 1, 15), 16, 10).cast("bigint")
-        % CDC_MOD
-        == 0
-    ).cast("bigint")
+    b = (md5_prefix("word") % CDC_MOD == 0).cast("bigint")
     w_prev = (
         Window.partitionBy("doc_id")
         .orderBy("pos")
@@ -4580,12 +4538,7 @@ def leakage_safe_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cl = simhash_clusters_indexed(spark, sf_dir).select("doc_id", "cluster_id")
 
     def _test(col: Column) -> Column:
-        return (
-            F.conv(F.substring(F.md5(col.cast("string")), 1, 15), 16, 10)
-            .cast("bigint")
-            % SPLIT_TEST_MOD
-            == 0
-        )
+        return md5_prefix(col.cast("string")) % SPLIT_TEST_MOD == 0
 
     # the flag table is DOCS-sized: hint both attach joins SHUFFLE_HASH
     # so Catalyst never auto-broadcasts a corpus-growing build side (the

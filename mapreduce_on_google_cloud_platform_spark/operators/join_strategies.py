@@ -237,14 +237,10 @@ BLOOM_PROBE_OFFSET = 1_000_000_000
 
 
 def _bloom_positions(key_col, i: int):
-    from ..functions.hashing import MINHASH_AB, MINHASH_P
+    from ..functions.hashing import MINHASH_AB, MINHASH_P, md5_prefix
 
     a, b = MINHASH_AB[i]
-    h = (
-        F.conv(F.substring(F.md5(key_col.cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
-        % MINHASH_P
-    )
+    h = md5_prefix(key_col.cast("string")) % MINHASH_P
     return ((F.lit(a) * h + F.lit(b)) % MINHASH_P) % BLOOM_M_BITS
 
 

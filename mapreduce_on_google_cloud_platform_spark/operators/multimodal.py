@@ -371,7 +371,8 @@ MM_HAMMING_MAX = 3
 
 
 def multimodal_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.hashing import SIMHASH_BANDS, SIMHASH_BITS
+    from ..functions.hashing import SIMHASH_BANDS, SIMHASH_BITS, md5_prefix
+    from ..functions.text import docs_by_id
 
     media = media_table(spark, sf_dir)
     # Optimization round 12, two plan-level rewrites (values identical,
@@ -388,10 +389,8 @@ def multimodal_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     #    s_j = 2*b_j - tot replaces sum(cnt*sgn_j) exactly.  Bit j of
     #    the hex-string extraction (digit floor(j/4), MSB-first within
     #    the digit) is bit (31 - j) of v, a pure shiftright.
-    from ..session import default_parallelism
-
     shingle_counts = (
-        media.repartition(default_parallelism(), F.col("doc_id"))
+        docs_by_id(media)
         .select("doc_id", F.hex("payload").alias("hx"))
         .select(
             "doc_id",
@@ -420,9 +419,7 @@ def multimodal_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     weighted = shingle_counts.select(
         "doc_id",
         "cnt",
-        F.conv(F.substring(F.md5("sh"), 1, SIMHASH_BITS // 4), 16, 10)
-        .cast("bigint")
-        .alias("v"),
+        md5_prefix("sh", SIMHASH_BITS // 4).alias("v"),
     )
     bit_aggs = [
         F.sum(

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.portable import SQL_REVENUE
-from ..functions.text import tokenize
+from ..functions.text import normalize_text, tokenize
 from ..sources import load_table
 
 MIN_TOKENS = 50
@@ -36,12 +36,11 @@ def _curation_flags(docs: DataFrame) -> DataFrame:
     """documents -> (doc_id, source, n_tokens, content_hash, is_pass,
     is_kept): the shared length-gate + exact-dedup decision columns
     behind curation_pipeline and curated_docs_with_observation."""
-    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
     base = docs.select(
         "doc_id",
         "source",
         F.size(tokenize(F.col("text"))).cast("bigint").alias("n_tokens"),
-        F.md5(norm).alias("content_hash"),
+        F.md5(normalize_text(F.col("text"))).alias("content_hash"),
     ).withColumn("is_pass", F.col("n_tokens") >= MIN_TOKENS)
     w = Window.partitionBy("content_hash")
     return base.withColumn(

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_prefix
 from ..functions.portable import (
     DEC,
     SQL_CHARGE,
@@ -2547,17 +2548,7 @@ def negative_sampling_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "custkey",
             "probe",
             (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws("|", F.col("custkey"), F.col("probe"))
-                        ),
-                        1,
-                        15,
-                    ),
-                    16,
-                    10,
-                ).cast("bigint")
+                md5_prefix(F.concat_ws("|", F.col("custkey"), F.col("probe")))
                 % F.col("max_part")
                 + 1
             ).alias("partkey"),

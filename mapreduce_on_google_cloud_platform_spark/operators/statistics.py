@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.hashing import MINHASH_P
+from ..functions.hashing import MINHASH_P, md5_prefix
 from ..functions.numeric import checked_bigint as _checked_bigint
 from ..functions.portable import dec
 from ..session import default_parallelism
@@ -1718,11 +1718,7 @@ KFOLD_K = 5
 
 def stratified_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    fold = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % KFOLD_K
-    ).cast("int")
+    fold = (md5_prefix(F.col("doc_id").cast("string"), 8) % KFOLD_K).cast("int")
     cells = docs.select("lang", fold.alias("fold"), "n_chars").groupBy(
         "lang", "fold"
     ).agg(
@@ -2674,11 +2670,7 @@ _RES_P = MINHASH_P  # one modulus, three sites: batch plan, oracle, streaming tw
 
 def weighted_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    h = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
-        % _RES_P
-    )
+    h = md5_prefix(F.col("doc_id").cast("string")) % _RES_P
     lnu9 = F.log(((h + 1).cast("double") / F.lit(2147483648.0))).cast(
         "decimal(18,9)"
     )

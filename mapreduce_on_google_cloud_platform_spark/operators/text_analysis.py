@@ -23,12 +23,14 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_prefix
 from ..functions.numeric import checked_bigint as _checked_bigint
 from ..functions.text import (
     DUCKDB_SHINGLES_CTE,
     DUCKDB_TOKS_CTE,
-    clean_token,
+    docs_by_id,
     duckdb_tokens_sql,
+    normalize_text,
     shingles_df,
     tokenize,
     tokens_df,
@@ -293,6 +295,9 @@ COCHRAN_CHI2_CRIT = 5.991  # CHI2_CRIT_95[k-1], pinned (statistics.py table)
 
 
 def cochran_q_test(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cochran's Q across the three document gates.  The shared token
+    stream stays persisted after the call; the session's cache contract
+    (``session.release_caches``) releases it."""
     # one shared tokenize pass for all three gates (defined beside
     # quality_gate_stack below; flag values identical to the standalone
     # gate queries -- differential-tested)
@@ -662,7 +667,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         return texts.map(h)
 
     docs = load_table(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
+    norm = normalize_text(F.col("text"))
     return docs.select(
         "doc_id",
         F.md5(norm).alias("md5_hex"),
@@ -2681,11 +2686,7 @@ TOP_COVER_K = 100
 
 def corpus_zipf_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "lang",
-        F.explode(F.split(F.col("text"), r"\s+")).alias("_tok"),
-    ).select("lang", clean_token(F.col("_tok")).alias("word"))
-    toks = toks.filter(F.col("word") != "")
+    toks = tokens_df(docs, keep=("lang",))
     wc = toks.groupBy("lang", "word").agg(F.count(F.lit(1)).alias("c"))
     w = Window.partitionBy("lang").orderBy(F.desc("c"), F.asc("word"))
     ranked = wc.withColumn("rnk", F.row_number().over(w))
@@ -2858,20 +2859,7 @@ DSIR_BUCKETS = 256  # 2 hex chars of md5
 def _dsir_feature_stream(docs: DataFrame) -> DataFrame:
     """(doc_id, lang, bucket) -- one row per unigram+bigram occurrence,
     bucket = 2-hex md5 prefix of the gram text."""
-    base = (
-        docs.select(
-            "doc_id",
-            "lang",
-            F.posexplode(F.split(F.col("text"), r"\s+")).alias("pos", "_tok"),
-        )
-        .select(
-            "doc_id",
-            "lang",
-            "pos",
-            clean_token(F.col("_tok")).alias("word"),
-        )
-        .filter(F.col("word") != "")
-    )
+    base = tokens_with_pos(docs, keep=("doc_id", "lang"))
     w = Window.partitionBy("doc_id").orderBy("pos")
     leads = base.select(
         "doc_id", "lang", "word", F.lead("word", 1).over(w).alias("w1")
@@ -3829,10 +3817,7 @@ SS_AUDIT_CAPACITY = 64  # == streaming.stateful.SS_CAPACITY
 
 def heavy_hitter_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    shard = (
-        F.conv(F.substring(F.md5("word"), 1, 15), 16, 10).cast("bigint")
-        % SS_AUDIT_SHARDS
-    )
+    shard = md5_prefix("word") % SS_AUDIT_SHARDS
     cells = (
         tokens_df(docs)
         .select("word", shard.alias("shard"))
@@ -3961,17 +3946,9 @@ def cms_width_error_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 *[
                     F.struct(
                         F.lit(j).alias("j"),
-                        F.conv(
-                            F.substring(
-                                F.md5(F.concat(F.lit(f"{j}:"), F.col("word"))),
-                                1,
-                                15,
-                            ),
-                            16,
-                            10,
-                        )
-                        .cast("bigint")
-                        .alias("h"),
+                        md5_prefix(
+                            F.concat(F.lit(f"{j}:"), F.col("word"))
+                        ).alias("h"),
                     )
                     for j in range(CMS_DEPTH)
                 ]
@@ -4296,19 +4273,14 @@ QUALITY_GATES: list[str] = [
 # every gate; each gate's statistics are order-independent aggregates of
 # that stream, so the flag values are identical to the standalone
 # queries' (differential-tested per gate).  The persisted stream is
-# released by the harness cache contract (__spark_entry__._fresh_cache /
-# bench clearCache between trials).
+# released by the cache contract (``session.release_caches``).
 # ---------------------------------------------------------------------------
 
 
 def _gate_substrate(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    from ..session import default_parallelism
-
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        default_parallelism(), F.col("doc_id")
-    )
+    docs = docs_by_id(load_table(spark, sf_dir, "documents"))
     return docs, tokens_with_pos(docs).persist()
 
 
@@ -4433,6 +4405,9 @@ def _quality_from_stream(docs: DataFrame, toks: DataFrame) -> DataFrame:
 
 
 def quality_gate_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-gate funnel over the QUALITY_GATES, in order, from one shared
+    token stream.  That stream stays persisted after the call; the
+    session's cache contract (``session.release_caches``) releases it."""
     docs, toks = _gate_substrate(spark, sf_dir)
     c4 = _c4_flags_from_stream(docs, toks).select(
         "doc_id",
@@ -4668,14 +4643,8 @@ def source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.hashing import MINHASH_AB, MINHASH_P
 
     docs = load_table(spark, sf_dir, "documents")
-    words = (
-        docs.select("source", F.explode(tokenize(F.col("text"))).alias("word"))
-        .distinct()
-    )
-    h = (
-        F.conv(F.substring(F.md5(F.col("word")), 1, 15), 16, 10).cast("bigint")
-        % MINHASH_P
-    )
+    words = tokens_df(docs, keep=("source",)).distinct()
+    h = md5_prefix(F.col("word")) % MINHASH_P
     sig = words.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_words"),
         *[
@@ -5899,17 +5868,13 @@ CHAR_TRIGRAM_ORACLE = f"""
 
 
 def nb_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import default_parallelism
-
     # re-spread the doc scan before the tokenize + trigram-explode chain:
     # the single small parquet file otherwise runs the whole heavy map
     # stage on one task (guide SS2.5; measured 4.6 -> 0.9 s for the
     # doc-count stage at sf0.1); at production scale the scan has
     # natural row-group parallelism and this one narrow shuffle of doc
     # rows is noise next to the explode it feeds
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        default_parallelism(), F.col("doc_id")
-    )
+    docs = docs_by_id(load_table(spark, sf_dir, "documents"))
     norm = docs.select(
         "doc_id", "lang", F.array_join(tokenize(F.col("text")), " ").alias("s")
     ).where(F.length("s") >= 3)
@@ -6294,9 +6259,7 @@ OOV_VOCAB_CAP = 1000
 
 def vocab_oov_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokens_df(docs).join(
-        docs.select("doc_id", "source"), "doc_id"
-    )
+    toks = tokens_df(docs, keep=("source",))
     by_word = toks.groupBy("source", "word").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
     )
@@ -6418,10 +6381,7 @@ def conformal_quality_threshold(
         .join(docs, "doc_id")
         .withColumn(
             "is_cal",
-            F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-            .cast("bigint")
-            % 2
-            == 0,
+            md5_prefix(F.col("doc_id").cast("string")) % 2 == 0,
         )
         # persist: the quality-score pipeline (whole-corpus tokenize)
         # feeds the calibration branch AND the eval rollup
@@ -6602,7 +6562,7 @@ CONFORMAL_ORACLE = f"""
 def js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     cnt = (
-        docs.select("source", F.explode(tokenize(F.col("text"))).alias("word"))
+        tokens_df(docs, keep=("source",))
         .groupBy("source", "word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )

@@ -700,6 +700,7 @@ def streaming_heavy_hitters_query(
     micro-batches (maxFilesPerTrigger=1)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
+    from ..functions.hashing import md5_prefix
     from ..functions.text import tokens_df
 
     cap = int(capacity)
@@ -763,10 +764,7 @@ def streaming_heavy_hitters_query(
     ).parquet(in_dir)
     toks = tokens_df(docs).select(
         "word",
-        (
-            F.conv(F.substring(F.md5("word"), 1, 15), 16, 10).cast("bigint")
-            % SS_SHARDS
-        ).alias("shard"),
+        (md5_prefix("word") % SS_SHARDS).alias("shard"),
     )
     return toks.groupBy("shard").applyInPandasWithState(
         track,

@@ -63,7 +63,7 @@ def test_wordcount_on_files_matches_pure_python(spark, tmp_path):
     docs = read_text_documents(spark, _write_books(tmp_path))
     got = {
         (r.word, r.cnt)
-        for r in tokens_df(docs, doc_col="doc")
+        for r in tokens_df(docs, keep=("doc",))
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
         .collect()
@@ -81,7 +81,7 @@ def test_inverted_index_on_files(spark, tmp_path):
     docs = read_text_documents(spark, _write_books(tmp_path))
     got = {
         (r.word, r.doc, r.cnt)
-        for r in tokens_df(docs, doc_col="doc")
+        for r in tokens_df(docs, keep=("doc",))
         .groupBy("word", "doc")
         .agg(F.count("*").alias("cnt"))
         .collect()
@@ -95,7 +95,7 @@ def test_inverted_index_on_files(spark, tmp_path):
 
 def test_sink_roundtrip(spark, tmp_path):
     docs = read_text_documents(spark, _write_books(tmp_path))
-    wc = tokens_df(docs, doc_col="doc").groupBy("word").agg(F.count("*").alias("cnt"))
+    wc = tokens_df(docs, keep=("doc",)).groupBy("word").agg(F.count("*").alias("cnt"))
     out = str(tmp_path / "final_wc")
     write_reference_text(reference_text_sink(wc), out)
     lines = {r.value for r in spark.read.text(out).collect()}

@@ -1,13 +1,18 @@
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_on_google_cloud_platform_spark.operators import wordcount
 from mapreduce_on_google_cloud_platform_spark.plans import ORACLES, QUERIES
 
-from .conftest import SF_ORACLE, SF_SMOKE
+from mapreduce_on_google_cloud_platform_spark.sources import load_table
+
+from .conftest import REPO, SF_ORACLE, SF_SMOKE
 from .oracle import assert_matches_oracle
+from .test_tables import _blank_strings_and_comments
 
 
 @pytest.mark.parametrize(
@@ -60,13 +65,18 @@ DOC_KEYED = (
     "inverted_index_map",
     "inverted_index_size_estimate",
 )
+# other queries that re-spread their input with functions.text.docs_by_id
+DOC_RESPREAD = DOC_KEYED + (
+    "quality_gate_stack",
+    "nb_langid_confusion",
+    "multimodal_simhash_neardup",
+)
 
 
 def test_doc_partition_count_invariance(spark):
-    """The doc-keyed indexes repartition documents to
-    spark.sql.shuffle.partitions before tokenizing; their rows must not
-    depend on that count (one partition, the core count, the
-    reference's 45 map workers)."""
+    """These queries repartition documents to spark.sql.shuffle.partitions
+    before tokenizing; their rows must not depend on that count (one
+    partition, the core count, the reference's 45 map workers)."""
     key = "spark.sql.shuffle.partitions"
     saved = spark.conf.get(key)
     try:
@@ -75,12 +85,59 @@ def test_doc_partition_count_invariance(spark):
             spark.conf.set(key, str(n))
             got[n] = {
                 name: sorted(QUERIES[name](spark, SF_SMOKE).collect())
-                for name in DOC_KEYED
+                for name in DOC_RESPREAD
             }
     finally:
         spark.conf.set(key, saved)
-    assert all(got[1][name] for name in DOC_KEYED)
+    assert all(got[1][name] for name in DOC_RESPREAD)
     assert got[1] == got[4] == got[45]
+
+
+@pytest.mark.parametrize("name", ["tokens_df", "tokens_with_pos"])
+def test_kept_columns_match_join_back(spark, name):
+    """Columns carried by ``keep`` equal the tokenize-then-join-back form."""
+    from mapreduce_on_google_cloud_platform_spark.functions import text
+
+    fn = getattr(text, name)
+    docs = load_table(spark, SF_SMOKE, "documents")
+    attrs = ("doc_id", "source", "lang")
+    carried = fn(docs, keep=attrs)
+    joined = fn(docs).join(docs.select(*attrs), "doc_id").select(carried.columns)
+    got = sorted(carried.collect())
+    assert got and got == sorted(joined.collect())
+
+
+# Spark spellings that only functions/text.py (tokens, normaliser,
+# document re-spread) and functions/hashing.py (md5 prefix) may contain.
+_FRONT_END_ONLY = {
+    "functions/text.py": [
+        r"F\.split\(\s*(?:F\.col\(\s*)?[\"']text[\"']",
+        r"explode\(\s*tokenize\(",
+        r"\.repartition\((?:[^()]|\([^()]*\))*?\(?\s*[\"']doc_id[\"']",
+        r"regexp_replace\(\s*F\.trim\(\s*F\.lower\(",
+    ],
+    "functions/hashing.py": [r"F\.conv\(\s*F\.substring\(\s*F\.md5\("],
+}
+
+
+def test_text_and_hash_rules_have_one_home():
+    """Tokenizing, normalising, re-spreading documents and the md5-prefix
+    hash are each spelled once; operators call the shared helpers."""
+    pkg = REPO / "mapreduce_on_google_cloud_platform_spark"
+    found = []
+    for py in sorted(pkg.rglob("*.py")):
+        rel = py.relative_to(pkg).as_posix()
+        src = py.read_text()
+        blank = _blank_strings_and_comments(src)
+        for home, patterns in _FRONT_END_ONLY.items():
+            if rel == home:
+                continue
+            for pat in patterns:
+                for m in re.finditer(pat, src):
+                    if blank[m.start()] != " ":  # match starts in code
+                        line = src.count("\n", 0, m.start()) + 1
+                        found.append(f"{rel}:{line}: {m.group(0)}")
+    assert found == []
 
 
 def test_tokenizer_rules(spark):
