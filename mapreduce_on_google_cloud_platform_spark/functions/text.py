@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import shuffle_partitions
+
 # Applied AFTER lower(); deletes everything that is not [0-9a-z].
 TOKEN_CLEAN_RE = "[^0-9a-z]"
 # str.split() splits on any whitespace run.
@@ -89,8 +91,7 @@ def docs_by_id(documents: DataFrame) -> DataFrame:
     column-only ``repartition("doc_id")`` plans as REPARTITION_BY_COL,
     which AQE coalesces back to one partition on a small corpus, while
     REPARTITION_BY_NUM keeps its count."""
-    n = int(documents.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return documents.repartition(n, "doc_id")
+    return documents.repartition(shuffle_partitions(documents.sparkSession), "doc_id")
 
 
 def _token_rows(documents: DataFrame, keep: tuple[str, ...], with_pos: bool) -> DataFrame:

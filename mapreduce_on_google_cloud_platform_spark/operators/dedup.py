@@ -57,6 +57,7 @@ from ..functions.vectors import (
     flat_normalized,
     sql_dot,
 )
+from ..session import shuffle_partitions
 from ..sources import load_table
 
 JACCARD_THRESHOLD = 0.2  # chosen to be non-trivial on the synthetic corpus
@@ -2216,13 +2217,11 @@ def fuzzy_part_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # side is re-spread by the blocking key first, because the single
     # small parquet file otherwise runs every DP on one task (guide
     # SS2.5: repartition immediately after an unsplittable-input read).
-    from ..session import default_parallelism
-
     part = load_table(spark, sf_dir, "part").select(
         "p_partkey", "p_brand", "p_type", "p_name"
     )
     a = part.repartition(
-        default_parallelism(), F.col("p_brand"), F.col("p_type")
+        shuffle_partitions(spark), F.col("p_brand"), F.col("p_type")
     ).alias("fa")
     b = part.alias("fb")
     bdist = F.levenshtein(
@@ -2495,10 +2494,8 @@ def fellegi_sunter_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same three levenshtein optimizations as fuzzy_part_name_pairs
     # (length-band prefilter, threshold-bounded DP, block-key re-spread);
     # the match-pair set and all aggregates are unchanged
-    from ..session import default_parallelism
-
     a = t.repartition(
-        default_parallelism(), F.col("p_brand"), F.col("p_type")
+        shuffle_partitions(spark), F.col("p_brand"), F.col("p_type")
     ).alias("ra")
     b = t.alias("rb")
     m = (

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import MINHASH_P, md5_prefix
 from ..functions.numeric import checked_bigint as _checked_bigint
 from ..functions.portable import dec
-from ..session import default_parallelism
+from ..session import shuffle_partitions
 from ..sources import load_table
 
 QS = (0.25, 0.5, 0.75, 0.95)
@@ -3443,11 +3443,10 @@ assert all(a != 0 for a, _ in BOOT_AB)
 
 def poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    base = ev.selectExpr(
+    base = ev.select(
         "event_type",
-        "CAST(round(value * 100) AS BIGINT) AS cents",
-        "CAST(conv(substring(md5(CAST(event_id AS STRING)), 1, 15), 16, 10)"
-        f" AS BIGINT) % {MINHASH_P} AS h",
+        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
+        (md5_prefix(F.col("event_id").cast("string")) % MINHASH_P).alias("h"),
     )
     # Optimization round 12 (values identical, re-verified vs the
     # unchanged oracle): each lane's weight is ONE ascending CASE chain
@@ -3468,7 +3467,7 @@ def poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"CAST(CASE {branches} ELSE {len(BOOT_T)} END AS BIGINT) AS w{i}"
         )
     weighted = base.repartition(
-        default_parallelism(), F.col("h")
+        shuffle_partitions(spark), F.col("h")
     ).selectExpr("event_type", "cents", *w_cols)
     aggs = [
         F.expr("CAST(count(*) AS BIGINT)").alias("n_events"),
@@ -4106,10 +4105,9 @@ def kmv_distinct_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         ev.select("event_type", "user_id")
         .distinct()
-        .selectExpr(
+        .select(
             "event_type",
-            "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 15),"
-            " 16, 10) AS BIGINT) AS h",
+            md5_prefix(F.col("user_id").cast("string")).alias("h"),
         )
     )
     exact = pairs.groupBy("event_type").agg(

@@ -10,13 +10,53 @@ oracle string over the same parquet tables.
 Column-name contract: every computed column is aliased identically in the
 Spark plan and the oracle SQL -- the driver's comparator sorts columns by
 name before hashing values.
+
+Plan cache.  Every ``QUERIES`` entry builds its DataFrame once and
+re-issues its analysed plan to later calls that would build the same
+plan -- a prepared statement for named queries served many times.  The
+contract:
+
+* key: the query name, the session, ``abspath(sf_dir)`` and the
+  session's full SQL config (``getAllConfs`` as one string, compared in
+  full, so two configs never share an entry).  A build that changes the
+  config (the events loader turns on ``nanosAsLong``) is stored under
+  the config read after it;
+* validity: the build's read log (``sources/tables.recording_reads``:
+  the version of every parquet file it read, the index-store path it
+  resolved).  A hit re-checks each with ``os.stat`` alone, no JVM call,
+  and rebuilds on any change or missing file;
+* gate: a build is stored only if every leaf of its plan with cached
+  data substituted (``withCachedData``, subqueries included) is a
+  ``LogicalRelation`` over paths the build recorded, a ``LocalRelation``,
+  ``OneRowRelation``, ``Range`` or a ``CTERelationRef`` (its definition
+  is checked in the same plan).  A ``LogicalRDD`` (``localCheckpoint``
+  output; holding it would pin checkpoint blocks), an
+  ``InMemoryRelation`` (a persisted intermediate that
+  ``session.release_caches`` drops), a streaming source, a catalog table
+  or an unversioned read keeps the query rebuilding on every call;
+* bound: the ``_PLAN_CACHE_MAX`` most recently used plans, in process,
+  behind a lock.  ``session.release_caches`` leaves them in place: it
+  drops cached data, and the cache holds plans only.
+
+A hit is a new DataFrame over the held analysed plan (``Dataset.ofRows``,
+which skips analysis for an analysed plan): it plans and executes in its
+own ``QueryExecution``, under the cached data and physical settings of
+the moment it runs, as a fresh build would; only the analysed plan, with
+its attribute ids, is shared.  So a caller must not join two results of
+one query with each other (the ids would clash); operators call each
+other's plain functions, never ``QUERIES``.
 """
 
 from __future__ import annotations
 
+import functools
+import os
+import threading
+from collections import OrderedDict
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from ..operators import (
     dedup,
@@ -31,6 +71,7 @@ from ..operators import (
     text_analysis,
     wordcount,
 )
+from ..sources import tables
 from ..streaming import STREAMING_QUERIES
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -39,8 +80,90 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
 
+_PLAN_CACHE_MAX = 64
+# key -> (analysed plan, read log)
+_PLANS: OrderedDict[tuple, tuple[object, tuple]] = OrderedDict()
+_PLANS_LOCK = threading.Lock()
+# Leaves that hold no data from outside the plan (file relations are
+# checked against the build's read log).
+_SELF_CONTAINED_LEAVES = frozenset({"LocalRelation", "OneRowRelation", "Range", "CTERelationRef"})
+
+
+@functools.lru_cache(maxsize=16)
+def _jvm_handles(spark: SparkSession) -> tuple:
+    """The session's SQLConf and the JVM ``Dataset`` class."""
+    return spark._jsparkSession.sessionState().conf(), spark._jvm.org.apache.spark.sql.classic.Dataset
+
+
+def _conf(spark: SparkSession) -> str:
+    return _jvm_handles(spark)[0].getAllConfs().toString()
+
+
+def _local_path(uri: str) -> str | None:
+    if not uri.startswith("file:"):
+        return None
+    return os.path.normpath(uri[len("file:") :])
+
+
+def _reissuable(spark: SparkSession, plan, paths: set[str]) -> bool:
+    """Whether every leaf of the analysed ``plan``, with cached data
+    substituted, is a recorded file or self-contained (the gate of the
+    module docstring)."""
+    if plan.isStreaming():
+        return False
+    qe = _jvm_handles(spark)[1].ofRows(spark._jsparkSession, plan).queryExecution()
+    with_cached = qe.withCachedData()
+    subs = with_cached.subqueriesAll()
+    for leaves in (with_cached.collectLeaves(), *(subs.apply(i).collectLeaves() for i in range(subs.size()))):
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            kind = leaf.nodeName()
+            if kind == "LogicalRelation":
+                try:
+                    roots = leaf.relation().location().rootPaths().mkString("\n")
+                except Exception:  # noqa: BLE001 -- not a file relation
+                    return False
+                if not all(_local_path(r) in paths for r in roots.split("\n")):
+                    return False
+            elif kind not in _SELF_CONTAINED_LEAVES:
+                return False
+    return True
+
+
+def _plan_cached(name: str, fn: QueryFn) -> QueryFn:
+    """``fn`` behind the plan cache (see the module docstring)."""
+
+    @functools.wraps(fn)
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        where = (name, spark, os.path.abspath(sf_dir))
+        key = (*where, _conf(spark))
+        with _PLANS_LOCK:
+            hit = _PLANS.get(key)
+            if hit is not None:
+                _PLANS.move_to_end(key)
+        if hit is not None:
+            plan, reads = hit
+            if tables.reads_unchanged(reads):
+                jdf = _jvm_handles(spark)[1].ofRows(spark._jsparkSession, plan)
+                return ClassicDataFrame(jdf, spark)
+            with _PLANS_LOCK:
+                _PLANS.pop(key, None)
+        with tables.recording_reads() as log:
+            df = fn(spark, sf_dir)
+        reads = tuple(dict.fromkeys(log))
+        plan = df._jdf.queryExecution().analyzed()
+        if _reissuable(spark, plan, tables.read_paths(reads)):
+            with _PLANS_LOCK:
+                _PLANS[(*where, _conf(spark))] = (plan, reads)
+                while len(_PLANS) > _PLAN_CACHE_MAX:
+                    _PLANS.popitem(last=False)
+        return df
+
+    return build
+
+
 def _register(name: str, fn: QueryFn, oracle: str | None) -> None:
-    QUERIES[name] = fn
+    QUERIES[name] = _plan_cached(name, fn)
     if oracle is not None:
         ORACLES[name] = oracle
 

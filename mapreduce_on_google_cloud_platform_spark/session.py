@@ -21,7 +21,16 @@ from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
+    """Local cores for a new session (``get_spark``).  Plans size their
+    partition counts from the session instead (``shuffle_partitions``),
+    so a plan depends on its files and session config only."""
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+def shuffle_partitions(spark: SparkSession) -> int:
+    """The session's ``spark.sql.shuffle.partitions``: the count an
+    explicit ``repartition(n, key)`` in a plan uses."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def get_spark(app_name: str = "mapreduce_gcp_spark", *, cpus: int | None = None) -> SparkSession:
@@ -74,5 +83,11 @@ def release_caches(spark: SparkSession) -> None:
     unpersist; for the rest, any harness running many queries in one
     session (perfbench/, tools/sweep.py) calls this between queries, and
     long-lived user sessions should do the same at natural barriers.
+
+    Compiled plans stay: the plan cache of ``plans/registry.py`` holds
+    only analysed plans that read versioned files and self-contained
+    relations, never a persisted intermediate, so dropping cached data
+    leaves every held plan valid, and the next call re-issues it instead
+    of paying the build again.
     """
     spark.catalog.clearCache()

@@ -40,7 +40,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .tables import read_parquet
+from .tables import read_parquet, record_read
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -138,6 +138,8 @@ def materialized(
     """Return the materialized intermediate ``name`` for ``sf_dir``,
     building it via ``build(spark, sf_dir) -> DataFrame`` on first use."""
     path = index_path(sf_dir, name, version)
+    # the store path moves with the dataset fingerprint and the store root
+    record_read(index_path, (sf_dir, name, version), path)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         tmp = f"{path}.tmp.{os.getpid()}"
         stage = f"{path}.stage.{os.getpid()}"

@@ -30,6 +30,12 @@ which starts no job.  The contract:
   schema once per query; only its static probe goes through here), and
   paths that ``os.stat`` cannot see (remote URIs, missing paths), which
   read uncached so Spark raises its usual errors.
+
+Read log (``recording_reads``).  While a plan build records, every
+versioned ``read_parquet`` notes ``(path, file version)`` and
+``index_store.materialized`` notes which store path it resolved; the
+plan cache of ``plans/registry.py`` keeps that log with the plan and
+re-issues the plan only while ``reads_unchanged`` holds.
 """
 
 from __future__ import annotations
@@ -37,6 +43,9 @@ from __future__ import annotations
 import functools
 import os
 import stat
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -91,14 +100,49 @@ def _file_version(path: str) -> tuple | None:
         return None
 
 
+# One entry per input a recording build read: (check, args, value), where
+# check(*args) == value for as long as the input is unchanged.
+Read = tuple[Callable, tuple, object]
+_READS: ContextVar[list[Read] | None] = ContextVar("plan_build_reads", default=None)
+
+
+def record_read(check: Callable, args: tuple, value: object) -> None:
+    """Note an input of the build being recorded, if one is."""
+    reads = _READS.get()
+    if reads is not None:
+        reads.append((check, args, value))
+
+
+@contextmanager
+def recording_reads() -> Iterator[list[Read]]:
+    """Collect the reads of the enclosed build."""
+    reads: list[Read] = []
+    token = _READS.set(reads)
+    try:
+        yield reads
+    finally:
+        _READS.reset(token)
+
+
+def reads_unchanged(reads: tuple[Read, ...]) -> bool:
+    return all(check(*args) == value for check, args, value in reads)
+
+
+def read_paths(reads: tuple[Read, ...]) -> set[str]:
+    """Absolute paths of the versioned parquet reads among ``reads``."""
+    return {args[0] for check, args, _ in reads if check is _file_version}
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` that infers the schema once per file
     version and settings (see the module docstring)."""
     version = _file_version(path)
     if version is None:
         return spark.read.parquet(path)
+    apath = os.path.abspath(path)
+    record_read(_file_version, (apath,), version)
     confs = tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
-    schema = _inferred_schema(spark, os.path.abspath(path), version, confs)
+    schema = _inferred_schema(spark, apath, version, confs)
     return spark.read.schema(schema).parquet(path)
 
 

@@ -71,12 +71,20 @@ DOC_RESPREAD = DOC_KEYED + (
     "nb_langid_confusion",
     "multimodal_simhash_neardup",
 )
+# queries that re-spread a non-document input by key to the same count
+KEY_RESPREAD = (
+    "fuzzy_part_name_pairs",
+    "fellegi_sunter_weights",
+    "poisson_bootstrap_ci",
+)
 
 
 def test_doc_partition_count_invariance(spark):
-    """These queries repartition documents to spark.sql.shuffle.partitions
-    before tokenizing; their rows must not depend on that count (one
-    partition, the core count, the reference's 45 map workers)."""
+    """These queries repartition their input (documents before
+    tokenizing, parts by blocking key, events by hash lane) to
+    spark.sql.shuffle.partitions; their rows must not depend on that
+    count (one partition, the core count, the reference's 45 map
+    workers)."""
     key = "spark.sql.shuffle.partitions"
     saved = spark.conf.get(key)
     try:
@@ -85,11 +93,11 @@ def test_doc_partition_count_invariance(spark):
             spark.conf.set(key, str(n))
             got[n] = {
                 name: sorted(QUERIES[name](spark, SF_SMOKE).collect())
-                for name in DOC_RESPREAD
+                for name in DOC_RESPREAD + KEY_RESPREAD
             }
     finally:
         spark.conf.set(key, saved)
-    assert all(got[1][name] for name in DOC_RESPREAD)
+    assert all(got[1][name] for name in DOC_RESPREAD + KEY_RESPREAD)
     assert got[1] == got[4] == got[45]
 
 
