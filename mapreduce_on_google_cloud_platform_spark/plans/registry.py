@@ -45,6 +45,19 @@ the moment it runs, as a fresh build would; only the analysed plan, with
 its attribute ids, is shared.  So a caller must not join two results of
 one query with each other (the ids would clash); operators call each
 other's plain functions, never ``QUERIES``.
+
+A hit runs no builder code, so a builder's side effects on the session
+are not repeated.  The SQL-text builders (``plans/sql_surface.py``,
+``relational.grouping_sets_sales``) register temp views before calling
+``spark.sql``; after a hit those views stay as the last build left them,
+possibly over another ``sf_dir``.  The re-issued plan is unaffected (the
+views' plans were inlined when it was analysed), and no caller in this
+repository reads those views after the query returns.
+
+Only repeated calls gain: a call is a hit when the same session already
+built the same query over the same ``sf_dir`` and config, with its files
+unchanged.  A first call pays the build plus the gate (one
+``withCachedData`` pass over the plan's leaves).
 """
 
 from __future__ import annotations
